@@ -56,14 +56,6 @@ def main() -> None:
     wanted = subset.split(",") if subset else HEADLINE
     names = [n for n in wanted if n in REGISTRY]
 
-    # Reuse table DataFrame objects across queries: re-reading parquet
-    # footers per query is fixed per-query overhead, not data-path
-    # work (scans still hit storage — no data is persisted, matching
-    # the warm-page-cache regime the DuckDB baseline runs in).
-    from data_wrangler_spark.catalog import enable_table_df_cache
-
-    enable_table_df_cache()
-
     # Warm-run methodology, matching the DuckDB baseline exactly
     # (tools/bench_duckdb.py runs each oracle once unmeasured, then
     # times the second run — BASELINE.md's numbers are warm runs):

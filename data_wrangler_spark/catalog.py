@@ -17,6 +17,8 @@ equivalents (SURVEY.md §1.5, §7.3):
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -103,27 +105,29 @@ def scratch_tag(sf_dir: str, source_table: str = "orders", params: str = "") -> 
     return f"{os.path.basename(abs_dir)}_{digest}"
 
 
-# Opt-in reuse of table DataFrame *objects* across queries in one
-# session: every load_table call otherwise re-lists the path and
-# re-reads parquet footers at analysis time — a fixed ~10-30 ms per
-# table per query that dominates sub-second queries in a harness
-# running the whole registry back-to-back. This caches only the lazy
-# plan (schema + file index), NOT data — scans still hit storage, so
-# engine-vs-engine benchmarks stay honest. Off by default because a
-# long-lived session would not see files replaced under the path.
-_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_DF_CACHE_ON = False
+# Table frames are reused across calls: a frame is a lazy plan (schema
+# + file listing), not data, so reuse skips the schema-inference job
+# spark.read.parquet runs per call (~0.1 s a table) while scans still
+# hit storage. The key holds the session, the absolute path and the
+# file's (st_mtime_ns, st_size), so a replaced file is read afresh, and
+# a hit must belong to the caller's session object. Least recently
+# used entries go first; each fixture dir adds up to len(TABLES).
+_MEMO_MAX = 64
+_memo: OrderedDict[tuple, DataFrame] = OrderedDict()
+_memo_lock = threading.Lock()
 
 
-def enable_table_df_cache(on: bool = True) -> None:
-    global _DF_CACHE_ON
-    _DF_CACHE_ON = on
-    if not on:
-        _DF_CACHE.clear()
+def _stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one named table from ``{sf_dir}/{name}.parquet``.
+    """Load one named table from ``{sf_dir}/{name}.parquet``, reusing
+    an earlier call's frame while the file is unchanged.
 
     Timestamp handling: current fixtures store TIMESTAMP(MICROS,
     isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ —
@@ -135,15 +139,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise UnknownIdentifierError(f"unknown table: {name!r}")
-    key = (id(spark), sf_dir, name)
-    if _DF_CACHE_ON and key in _DF_CACHE:
-        return _DF_CACHE[key]
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    stamp = _stamp(path)
+    key = (id(spark), path, stamp)
+    with _memo_lock:
+        df = _memo.get(key)
+        if df is not None and df.sparkSession is spark:
+            _memo.move_to_end(key)
+            return df
     apply_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if _DF_CACHE_ON:
-        _DF_CACHE[key] = df
+    with _memo_lock:  # a missing file never gets here: the read raises
+        _memo[key] = df
+        _memo.move_to_end(key)
+        while len(_memo) > _MEMO_MAX:
+            _memo.popitem(last=False)
     return df
 
 
@@ -153,12 +165,9 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            self._cache[name] = load_table(self.spark, self.sf_dir, name)
-        return self._cache[name]
+        return load_table(self.spark, self.sf_dir, name)
 
     # -- identifier validation (replaces examiner.js regex defense) --
 

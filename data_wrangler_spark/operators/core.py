@@ -235,7 +235,8 @@ def q_dynamic_select(
              WHEN 'INTEGER' THEN 'int'
              WHEN 'DOUBLE' THEN 'double'
              WHEN 'VARCHAR' THEN 'string'
-             WHEN 'TIMESTAMP' THEN 'timestamp'
+             WHEN 'TIMESTAMP' THEN 'timestamp_ntz'
+             WHEN 'FLOAT[]' THEN 'array<float>'
              ELSE lower(column_type)
            END AS data_type
     FROM (DESCRIBE customer)
@@ -247,10 +248,15 @@ def q_describe(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Schema introspection (reference: `desc $table` delegated to
     MySQL, config.json:34; name-only inference in examineQuery,
     lib/examiner.js:139-160). Spark gives the exact typed StructType
-    from Catalyst analysis for free."""
-    df = _t(spark, sf_dir, Catalog(spark, sf_dir).validate_table(table))
-    rows = [(name, dtype) for name, dtype in df.dtypes]
-    return spark.createDataFrame(rows, "col_name string, data_type string")
+    from Catalyst analysis for free. The answer is built from a local
+    Arrow table, which Spark plans as a LocalRelation: no job and no
+    Python worker, unlike a list of tuples."""
+    import pyarrow as pa
+
+    dtypes = _t(spark, sf_dir, Catalog(spark, sf_dir).validate_table(table)).dtypes
+    return spark.createDataFrame(
+        pa.table({"col_name": [n for n, _ in dtypes], "data_type": [t for _, t in dtypes]})
+    )
 
 
 # --------------------------------------------------------------------------

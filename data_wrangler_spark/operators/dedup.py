@@ -335,9 +335,10 @@ def _band_table(
     no verify step — strictly narrower keys. (A 60-bit hash of the
     string was considered and rejected: it needs the signature in
     the payload for collision rejection anyway, totalling MORE bytes
-    than keying on the 4 longs directly.) The string form remains
-    the persisted-index schema (ensure_inc_index et al.) — an
-    on-disk format shared by batch and streaming probes.
+    than keying on the 4 longs directly.) The persisted band index
+    (ensure_inc_index et al., fmt=l4) stores the same compact key
+    (_BANDS_SCHEMA), the on-disk format shared by batch and
+    streaming probes.
 
     Docs with an EMPTY shingle set (< 3 words) are dropped here, on
     every consumer — index build, probe, and stream alike. Their

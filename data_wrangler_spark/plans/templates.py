@@ -31,12 +31,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_wrangler_spark.catalog import Catalog
+from data_wrangler_spark.catalog import TABLES, Catalog, UnknownIdentifierError
 
 _QMARK = re.compile(r"\?")
 _STRING_LITERAL = re.compile(r"'[^']*'")
 _IDENTIFIER_USE = re.compile(r"IDENTIFIER\(\s*:(\w+)\s*\)", re.IGNORECASE)
 _NAMED = re.compile(r":(\w+)")
+_WORD = re.compile(r"\w+")
 
 
 class MissingParameterError(ValueError):
@@ -55,6 +56,7 @@ class SQLTemplate:
     n_positional: int
     named_params: tuple[str, ...]
     identifier_params: tuple[str, ...]
+    tables: tuple[str, ...] = ()  # catalog tables named in the SQL text
     doc: str = ""
 
 
@@ -108,12 +110,14 @@ class SQLTemplates:
             if not re.fullmatch(r"p\d+", n)
         )
         value_params = tuple(n for n in all_named if n not in ident_params)
+        words = {w.lower() for w in _WORD.findall(rewritten)}
         tpl = SQLTemplate(
             name=name,
             sql=rewritten,
             n_positional=counter,
             named_params=value_params,
             identifier_params=ident_params,
+            tables=tuple(t for t in TABLES if t in words),
             doc=doc,
         )
         self._templates[name] = tpl
@@ -170,14 +174,17 @@ class SQLTemplates:
         # known table — checked against real schema, not a regex
         for p in tpl.identifier_params:
             self._validate_identifier(str(named[p]))
-        self.catalog.register_views()
+        # register only the views this statement can read: the tables
+        # its text names plus any table bound to an identifier param
+        bound = {str(named[p]) for p in tpl.identifier_params}
+        self.catalog.register_views(
+            tuple(t for t in TABLES if t in tpl.tables or t in bound)
+        )
         args = {f"p{i + 1}": v for i, v in enumerate(positional)}
         args.update({k: named[k] for k in (*tpl.named_params, *tpl.identifier_params)})
         return spark.sql(tpl.sql, args=args)
 
     def _validate_identifier(self, ident: str) -> None:
-        from data_wrangler_spark.catalog import TABLES, UnknownIdentifierError
-
         if ident in TABLES:
             return
         for t in TABLES:

@@ -100,3 +100,26 @@ def test_engine_explain_shows_physical_plan(spark, sf_dir):
 
     plan = Engine(spark, sf_dir).explain("q_filter_eq")
     assert "PushedFilters" in plan and "Scan parquet" in plan
+
+
+def test_describe_matches_spliced_oracle_for_every_table(spark, sf_dir):
+    """q_describe bound to each catalog table answers what its
+    registered oracle answers with the bind spliced in; the default
+    bind keeps its exact answer."""
+    from data_wrangler_spark.catalog import TABLES
+    from data_wrangler_spark.registry import REGISTRY
+    from tools.verify_local import duck_con
+
+    spec = REGISTRY["q_describe"]
+    con = duck_con(sf_dir)
+    for t in TABLES:
+        got = [tuple(r) for r in spec.run(spark, sf_dir, table=t).collect()]
+        oracle = spec.oracle.replace("DESCRIBE customer", f"DESCRIBE {t}")
+        assert got == con.execute(oracle).fetchall(), t
+    assert [tuple(r) for r in spec.run(spark, sf_dir).collect()] == [
+        ("c_custkey", "bigint"),
+        ("c_name", "string"),
+        ("c_nationkey", "int"),
+        ("c_acctbal", "double"),
+        ("c_mktsegment", "string"),
+    ]

@@ -137,3 +137,77 @@ def test_fromwhat_identifier_validated(spark, ref, sf_dir):
 
     with _pytest.raises(UnknownIdentifierError):
         ref.run(spark, "fromwhat", what="supplier; drop table x", pk="s_suppkey")
+
+
+# (name, positional, named, views the statement reads) for every
+# reference template and alias
+_VIEW_CASES = [
+    ("billing.invoices", ("1995-01-01",), {}, ("orders",)),
+    ("test.invoicesByDate", ("1995-01-01",), {}, ("orders",)),
+    ("billing.lineitems", (1,), {}, ("lineitem",)),
+    ("test.lineItems", (1,), {}, ("lineitem",)),
+    ("billing.anyById", (), {"relation": "part", "pk": "p_partkey", "id": 5}, ("part",)),
+    ("test.anyById", (), {"relation": "customer", "pk": "c_custkey", "id": 3}, ("customer",)),
+    (
+        "billing.getXfromYwhereZisQ",
+        (),
+        {"x": "n_name", "y": "nation", "z": "n_regionkey", "q": 2},
+        ("nation",),
+    ),
+    (
+        "otherdb.freeForm",
+        (),
+        {"x": "s_name", "y": "supplier", "z": "s_nationkey", "q": 3},
+        ("supplier",),
+    ),
+    ("support.descTable", (), {"table": "region"}, ("region",)),
+    ("otherdb.descTable", (), {"table": "embeddings"}, ("embeddings",)),
+    ("support.ticket", (1,), {}, ("orders",)),
+    ("support.ticketAnswers", (1,), {}, ("orders", "lineitem")),
+    ("otherdb.ticketAnswers", (3,), {}, ("orders", "lineitem")),
+    (
+        "support.getStuff",
+        ("AUTOMOBILE",),
+        {"relation": "customer", "field": "c_mktsegment"},
+        ("customer",),
+    ),
+    (
+        "otherdb.anyByField",
+        ("R",),
+        {"relation": "lineitem", "field": "l_returnflag"},
+        ("lineitem",),
+    ),
+    ("salesforce.accounts", (), {}, ("supplier",)),
+    ("salesforce.fromwhat", (), {"what": "documents", "pk": "doc_id"}, ("documents",)),
+]
+
+
+def test_q_registers_only_the_views_it_reads(spark, ref, monkeypatch):
+    """A /q request registers the views its SQL names plus the tables
+    bound to its identifier params — not all ten — and answers exactly
+    as it did with every view registered."""
+    from data_wrangler_spark.catalog import TABLES
+
+    assert sorted({c[0] for c in _VIEW_CASES}) == ref.names()
+    real = ref.catalog.register_views
+    calls: list[tuple[str, ...]] = []
+    register_all = False
+
+    def spy(names=TABLES):
+        calls.append(tuple(names))
+        real(TABLES if register_all else names)
+
+    monkeypatch.setattr(ref.catalog, "register_views", spy)
+    try:
+        for name, pos, named, views in _VIEW_CASES:
+            register_all = True
+            want = sorted(map(str, ref.run(spark, name, *pos, **named).collect()))
+            register_all = False
+            for t in TABLES:
+                spark.catalog.dropTempView(t)
+            calls.clear()
+            got = sorted(map(str, ref.run(spark, name, *pos, **named).collect()))
+            assert calls == [views], name
+            assert got == want, name
+    finally:
+        real()

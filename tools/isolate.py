@@ -30,11 +30,9 @@ def main() -> int:
 
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.catalog import enable_table_df_cache
     from data_wrangler_spark.functions.distributed import release_pinned
 
     spark = get_spark("isolate")
-    enable_table_df_cache()
     out = {}
     for name in args:
         spark.sparkContext.setJobDescription(f"isolate warmup: {name}")
